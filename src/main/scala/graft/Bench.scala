@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Hypervisor-steal measurement for the bench launch (r16 verdict #4).
   * Round 16 measured that this host's steal is DEMAND-TRIGGERED: an
@@ -103,10 +102,23 @@ object Bench {
     * bridge is BENCH_ACTION_AB_r17.tsv). */
   val TimedAction = "noop"
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (<0x20) escaped — a tab or CR in a key, a path or a
+    * message would otherwise make the reader's json.load fail. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def summaryLine(total: Double, n: Int, failed: Int, sf: String,
       loadStart: Double = -1.0, loadEnd: Double = -1.0,
       stealProbe: Double = -1.0, stealRun: Double = -1.0): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"sf":"$sf","action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"detail":"$DetailPath"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"sf":${jsonStr(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"detail":"$DetailPath"}"""
 
   def detailJson(results: Seq[(String, Double)], sf: String,
       loadStart: Double = -1.0, loadEnd: Double = -1.0,
@@ -114,20 +126,21 @@ object Bench {
       stealTicks: Seq[Double] = Seq.empty,
       bcastViolations: Seq[String] = Seq.empty,
       jitMs: Seq[(String, Long)] = Seq.empty): String = {
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Any)]) =
+      kv.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
+    val qs = obj(results)
     val ticks = stealTicks.mkString("[", ",", "]")
-    val bv = bcastViolations.map(s => "\"" +
-      s.replace("\\", "\\\\").replace("\"", "\\\"").take(200) + "\"")
+    val bv = bcastViolations.map(v => jsonStr(v.take(200)))
       .mkString("[", ",", "]")
     // per-key JIT-compiler wall-ms (CompilationMXBean delta across the
     // timed action — r17/r18 roving-spike adjudication: the spike is C2
     // compile placement, not plan cost; see OPTIMIZATION_r18.md. A key
     // whose seconds jump WITH a jit_ms jump is compiler-window noise; one
-    // without is a real plan change.)
-    val jm = jitMs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    s"""{"metric":"per_query","unit":"sec","sf":"$sf","action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_ms":$jm,"queries":$qs}"""
+    // without is a real plan change.) The counter is JVM-wide, so a key's
+    // delta also includes compile work queued by earlier keys that the
+    // compiler threads finish inside this key's window.
+    val jm = obj(jitMs)
+    s"""{"metric":"per_query","unit":"sec","sf":${jsonStr(sf)},"action":"$TimedAction","loadavg":$loadEnd,"loadavg_start":$loadStart,"steal_probe_pct":$stealProbe,"steal_pct":$stealRun,"steal_ticks_10s_pct":$ticks,"bcast_violations":$bv,"jit_ms":$jm,"queries":$qs}"""
   }
 
   /** 1-minute system load average, rounded to 2 decimals (-1.0 where the
@@ -159,7 +172,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Steal-aware launch (r16 verdict #4): saturate the benched width and
     // retry until the hypervisor-steal window is quiet, so the OFFICIAL
     // per-round artifact is itself a quiet point rather than needing a
@@ -173,38 +185,14 @@ object Bench {
     var quiet = false
     while (!quiet && attempt < stealTries) {
       attempt += 1
-      probeSteal = Steal.probe(cpus.toInt, 8)
+      probeSteal = Steal.probe(SparkEntry.cpus, 8)
       System.err.println(
         s"[bench] full-width steal probe $attempt/$stealTries: " +
           s"$probeSteal% (gate $stealMax%)")
       if (probeSteal < 0 || probeSteal <= stealMax) quiet = true
       else Thread.sleep(60000)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Coalesce small post-shuffle partitions to the advisory SIZE, not to
-      // max parallelism: with the default parallelismFirst=true, AQE keeps
-      // ~`cpus` post-shuffle partitions even for KB-sized shuffles, so at
-      // the graded cpus=32 every one of 171 small queries paid a
-      // 32-tiny-task floor per shuffle (round-5 bench: trivial queries
-      // inflated most). false is also the documented recommendation for
-      // real clusters — partitions sized to data, not to the core count.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // broadcast decisions read actual-bytes-calibrated estimates
-      // (measured 6.3× row-format blowup — see GraftSession)
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      // faithful broadcast dataSize metrics for the audit below: without
-      // this the big-heap default page size (32 MiB) floors every build's
-      // dataSize at one allocated page (see GraftSession.BufferPageSize)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: benign per-query WARNs (e.g. WindowExec's bounded
-    // no-partition notes on k-row frames) otherwise flood the driver's
-    // bounded stdout+stderr tail that must retain the summary line.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session()
     // Untimed warmup: absorb one-time JVM/codegen and streaming-engine
     // initialization (~6s measured) so per-query numbers reflect per-query
     // cost, not which arbitrary query ran first. Deterministic name order
@@ -225,7 +213,7 @@ object Bench {
     val jitSupported = compiler != null &&
       compiler.isCompilationTimeMonitoringSupported
     val jitTimes = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.select(Nil).map { case (name, fn) =>
       val jit0 = if (jitSupported) compiler.getTotalCompilationTime else 0L
       val t0 = System.nanoTime()
       // A crashed query reports -1.0, never a normal-looking elapsed time.

@@ -1,34 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration harness for the optimization rounds: times named keys
-  * under the SAME session + noop action as the bench, with warm repeats,
-  * so a candidate change can be A/B'd in seconds instead of a full bench
-  * sweep. Prints per-repeat seconds to stderr; never used by the driver.
-  * Usage:
+  * (default: all) under the SAME session + noop action as the bench, with
+  * warm repeats, so a candidate change can be A/B'd in seconds instead of a
+  * full bench sweep. Prints per-repeat seconds to stderr. Usage:
   *   SPARK_GRAFT_CPUS=32 tools/run.sh graft.Probe <sfDir> <repeats> <key...>
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.sources.fileCompressionFactor",
-        GraftSession.FileCompressionFactor)
-      .config("spark.buffer.pageSize", GraftSession.BufferPageSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val unknown = keys.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    keys.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    val selected = SparkEntry.select(args.drop(2).toSeq)
+    val spark = SparkEntry.session()
+    selected.foreach { case (name, fn) =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -25,6 +25,32 @@ object SparkEntry {
       TierCSubquery.queries ++ TierD.queries ++
       Dedup.queries ++ Similarity.queries ++ TextStats.queries
 
+  /** The keys the harness mains run: `names` in the order given, or every
+    * key in name order when `names` is empty. An unknown name fails before
+    * any query runs. */
+  def select(names: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq.sortBy(_._1)
+    else names.distinct.map(n => n -> all(n))
+  }
+
+  /** Core count of the harness mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The session every harness main runs on: [[GraftSession.builder]] at
+    * `local[cpus]` with `cpus` shuffle partitions. Logs at ERROR, not WARN:
+    * benign per-query WARNs (e.g. WindowExec's "No Partition Defined" on
+    * k-row global windows) would crowd the mains' own stderr diagnostics
+    * and the bench's final summary line out of a bounded output tail. */
+  def session(): SparkSession = {
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

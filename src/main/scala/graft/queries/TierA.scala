@@ -183,19 +183,21 @@ object TierA {
           col("n_regionkey").as("n_regionkey"))
         .orderBy("n_nationkey")
     }),
-    // A7 — workflow DAG (README.md:155-166): trigger → crawl → transform →
-    // load, strictly ordered.
+    // A7 — workflow DAG (README.md:155-166): trigger → crawl (:162) →
+    // "Change schema" job (:149) → target load (:150), strictly ordered.
     "workflow_dag" -> ((s, d) => {
       val src = tmp("graft_wf_src"); val out = tmp("graft_wf_out")
       CsvSource.write(supplier(s, d), src)
-      Pipeline(
-        crawl = () => new Crawler(s).crawl(src, s"wf_supplier_${System.nanoTime}"),
-        transform = df => df.select(
+      Workflow.run(Seq(
+        Workflow.node("crawl")(_ =>
+          new Crawler(s).crawl(src, s"wf_supplier_${System.nanoTime}")),
+        Workflow.node("transform", "crawl")(up => up("crawl").select(
           col("s_suppkey").as("supplier_id"),
           upper(col("s_name")).as("supplier_name"),
-          col("s_acctbal").cast("double").as("balance")),
-        load = ParquetSink(out)
-      ).run()
+          col("s_acctbal").cast("double").as("balance"))),
+        Workflow.node("load", "transform") { up =>
+          ParquetSink(out).write(up("transform")); up("transform")
+        }))
       s.read.parquet(out).orderBy("supplier_id")
     }),
     // A7b — AND-gate workflow (README.md:164, "start after ALL watched

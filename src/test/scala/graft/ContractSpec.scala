@@ -158,6 +158,26 @@ class ContractSpec extends SparkSpec {
       "per-query detail must never be inlined into the summary line")
   }
 
+  test("bench summary and detail escape every string they write") {
+    // sf comes from SPARK_GRAFT_SF_DIR; a quote, backslash or tab in it (or
+    // in a key name or a broadcast-violation note) must not break the JSON
+    val sf = "/data/a\"b\\c\td"
+    val esc = "\"/data/a\\\"b\\\\c\\td\""
+    val line = Bench.summaryLine(1.0, 1, 0, sf)
+    val detail = Bench.detailJson(Seq("k\"1" -> 1.0), sf,
+      bcastViolations = Seq("x\ny"), jitMs = Seq("k\"1" -> 5L))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (json <- Seq(line, detail)) {
+      assert(json.contains("\"sf\":" + esc), json)
+      assert(!json.exists(_ < ' '), s"raw control character in: $json")
+      assert(mapper.readTree(json).get("sf").asText() == sf)
+    }
+    val tree = mapper.readTree(detail)
+    assert(tree.get("queries").get("k\"1").asDouble() == 1.0)
+    assert(tree.get("jit_ms").get("k\"1").asLong() == 5L)
+    assert(tree.get("bcast_violations").get(0).asText() == "x\ny")
+  }
+
   test("build.sbt keeps the bench's stdout shape driver-parseable") {
     // Round 3 proved the line itself isn't enough: the driver launches the
     // bench via `sbt "runMain graft.Bench"`, and with sbt's defaults the

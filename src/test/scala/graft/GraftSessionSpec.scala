@@ -1,11 +1,41 @@
 package graft
 
-/** The SQL surface of the native functions: GraftSession.register binds them
-  * on the shared suite session (the config-time path is
-  * spark.sql.extensions=graft.GraftExtensions, same builders). */
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+/** The SQL surface of the native functions, on both paths that bind them:
+  * the session extension every `GraftSession.builder` session carries, and
+  * late registration (`GraftSession.register`) on a session built without
+  * it. Both paths share one builder list. */
 class GraftSessionSpec extends SparkSpec {
 
+  /** A session on the suite's context whose registry has had the graft
+    * functions dropped — what a shell session built without the extension
+    * sees — so only `register` can make them resolve again. */
+  private def bareSession(): SparkSession = {
+    val s = spark.newSession()
+    GraftFunctions.builders.foreach { case (name, _, _) =>
+      s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name))
+    }
+    val e = intercept[Throwable](s.sql("SELECT rolling_hash('abc')").collect())
+    assert(e.getMessage.contains("rolling_hash"))
+    s
+  }
+
+  test("native functions resolve through the session extension alone") {
+    val s = spark.newSession()
+    val r = s.sql(
+      """SELECT rolling_hash('abc') AS rh,
+        |       bloom_might_contain(
+        |         (SELECT bloom_agg(id, 100L) FROM range(10)), 3L) AS hit
+        |""".stripMargin).head()
+    assert(r.getLong(0) ==
+      graft.functions.RollingHash.hashBytes("abc".getBytes("UTF-8")))
+    assert(r.getBoolean(1), "a bloom filter has no false negatives")
+  }
+
   test("native functions are callable from SQL after registration") {
+    val spark = bareSession()
     GraftSession.register(spark)
     val r = spark.sql(
       """SELECT rolling_hash('abc') AS rh,
@@ -30,6 +60,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("SQL surface rejects wrong arity and non-literal literals clearly") {
+    val spark = bareSession()
     GraftSession.register(spark)
     def failsWith(sql: String, fragment: String): Unit = {
       val e = intercept[Throwable](spark.sql(sql).collect())
